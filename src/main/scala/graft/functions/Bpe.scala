@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Bpe {
 
-  /** An ordered merge list with its rank lookup — serializable so the
-    * UDF-fallback closure can ship it to executors whole. */
+  /** An ordered merge list with its rank lookup — serializable so a
+    * UDF closure can ship it to executors whole. */
   final class MergeTable(val merges: IndexedSeq[(String, String)]) extends Serializable {
     val rank: Map[(String, String), Int] = merges.zipWithIndex.toMap
   }
@@ -118,7 +118,7 @@ object Bpe {
     syms
   }
 
-  /** Flat token stream of a word sequence — the Seq twin the UDF fallback
+  /** Flat token stream of a word sequence — the Seq twin the specs' UDF
     * and the differential generator share with [[BpeEncode]]. */
   def encodeWords(words: Seq[String], table: MergeTable): Seq[String] =
     words.flatMap(w => encodeWord(if (w == null) "" else w, table))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document fingerprint math shared by the native expressions below and
-  * the UDF fallbacks in Dedup. Static-forwarder methods so whole-stage
+  * the driver-side twins in verify.Expected. Static-forwarder methods so whole-stage
   * codegen can call them directly (`graft.functions.DocHashes.simhash(...)`)
   * — the generated code stays a single static call per row, no interpreted
   * expression-tree walk and, crucially, NO explode + re-group shuffle: the
@@ -173,18 +173,8 @@ object DocHashes {
     best.toLong
   }
 
-  def topCountSeq(words: Seq[String]): Long = {
-    val arr = new GenericArrayData(words.map(w =>
-      if (w == null) null else UTF8String.fromString(w)).toArray[Any])
-    topCount(arr)
-  }
-
-  // Seq[String] twins for the UDF fallback path (bit-identical: same bytes
-  // hashed with the same seeds).
-  def shingleHashesSeq(words: Seq[String], shingle: Int): Array[Long] = {
-    val arr = new GenericArrayData(words.map(w => UTF8String.fromString(w)).toArray[Any])
-    shingleHashes(arr, shingle)
-  }
+  // Seq[String] entry points for the driver-side twins in verify.Expected
+  // (bit-identical: same bytes hashed with the same seeds).
   def simhashSeq(words: Seq[String], shingle: Int): Long = {
     val arr = new GenericArrayData(words.map(w => UTF8String.fromString(w)).toArray[Any])
     simhash(arr, shingle)

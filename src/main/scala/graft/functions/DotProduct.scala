@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * builtins < native Expression < UDF).
   *
   * Determinism contract: strictly sequential left-to-right double
-  * accumulation — bit-identical to the interpreted fallback and to the
-  * DuckDB oracle's `list_aggregate(..., 'sum')`, which is what makes
+  * accumulation — bit-identical to the interpreted `aggregate`/`zip_with`
+  * reference twin in the specs and to the DuckDB oracle's `list_aggregate(..., 'sum')`, which is what makes
   * differential testing of float math possible.
   *
   * Null elements contribute nothing (embeddings never contain them; the

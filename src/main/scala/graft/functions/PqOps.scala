@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * shipped as a plan constant, not re-evaluated per row.
   *
   * NULL-embedding rows are outside the contract: as BinaryExpressions the
-  * kernels return NULL for them, while the builtin-tree fallback returns
+  * kernels return NULL for them, while the builtin-tree twin returns
   * an array built over null scores. The embeddings loader guarantees
   * non-null vectors (null ELEMENTS inside a vector are handled — they
   * contribute 0, like graft_dot); callers feeding other sources must

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Kernels
+import graft.Kernels.normText
 import graft.sources.Tables
 
 /** Relevance search over the corpus: BM25 keyword top-k and an
@@ -22,17 +24,6 @@ import graft.sources.Tables
   *    [[Dedup.qDedupNgram]]'s gram buckets), never all pairs.
   */
 object Search {
-
-  /** lowercase, strip non [a-z ], collapse runs of spaces, trim —
-    * byte-identical to the oracle's regexp_replace chain (one
-    * definition ↔ one oracle CTE, the [[TextOps]] convention). */
-  // native-kernel dispatch on the constructing session — see
-  // TextOps.normText for the active-session rationale; the tree form and
-  // kernel are pinned equal by TextOpsSpec
-  private def normText(c: Column): Column =
-    if (SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_norm_text")))
-      call_function("graft_norm_text", c)
-    else trim(regexp_replace(regexp_replace(lower(c), "[^a-z ]", ""), " +", " "))
 
   // ---- BM25 keyword search ------------------------------------------------
 
@@ -596,12 +587,12 @@ object Search {
     val lex = rankTop(bm25(Tables.documents(s, dir)),
       Seq(col("bm25").desc, col("doc_id")), "rank_lex")
       .select(col("doc_id"), col("rank_lex"))
-    val e = Similarity.withNorm(s, Tables.embeddings(s, dir))
+    val e = Similarity.withNorm(Tables.embeddings(s, dir))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .withColumn("cosine",
-        round(Similarity.dotCol(s, col("q_emb"), col("embedding"))
+        round(Kernels.dot(col("q_emb"), col("embedding"))
           / (col("q_nrm") * col("nrm")), 6))
     val dense = rankTop(scored.select(col("vec_id"), col("cosine")),
       Seq(col("cosine").desc, col("vec_id")), "rank_dense")

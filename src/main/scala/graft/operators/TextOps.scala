@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Kernels
+import graft.Kernels.normText
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
@@ -17,27 +19,6 @@ import graft.sources.Tables
   * deterministic comparison (drop it in production use).
   */
 object TextOps {
-
-  /** lowercase, strip non [a-z ], collapse runs of spaces, trim — the
-    * builtin tree, package-private so TextOpsSpec pins it against the
-    * native kernel. */
-  private[graft] def normTextTree(c: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(c), "[^a-z ]", ""), " +", " "))
-
-  /** [[normTextTree]] as the native [[graft.functions.NormTextExpr]]
-    * kernel when the constructing session has GraftExtensions (r22,
-    * guide §4): this is the FIRST projection of every tokenizing corpus
-    * scan in the file, and the tree materializes four intermediate
-    * strings per document with two regex passes. Dispatch keys on the
-    * ACTIVE session (queries are constructed on the thread of the
-    * session that runs them — Verify/Bench/Explain/tests all construct
-    * via `fn(spark, dir)`), which keeps the 20-odd call sites'
-    * one-argument shape; a thread with no active session conservatively
-    * takes the tree form. */
-  private def normText(c: Column): Column =
-    if (SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_norm_text")))
-      call_function("graft_norm_text", c)
-    else normTextTree(c)
 
   /** Whitespace word count. */
   private def wordCount(c: Column): Column =
@@ -328,24 +309,15 @@ object TextOps {
   }
 
   /** The flat BPE token array of a words column — the native
-    * `graft_bpe` expression with the merge table riding as a literal
+    * `graft_bpe` kernel with the merge table riding as a literal
     * (per-row merge loop where the document lives; no shuffle, no
-    * driver loop) when the session has GraftExtensions, else a UDF over
-    * the same shared encoder (TextOpsSpec proves the two faces equal). */
-  private[graft] def bpeTokensCol(s: SparkSession, words: Column,
-      merges: IndexedSeq[(String, String)]): Column =
-    if (s.catalog.functionExists("graft_bpe"))
-      // typedLit, not array(array(..)): it ships the table as ONE literal
-      // and keeps the array<array<string>> type when the trained table is
-      // EMPTY (array() of zero elements types as array<null>, which the
-      // expression's type check rightly rejects).
-      call_function("graft_bpe", words,
-        typedLit(merges.map { case (l, r) => Seq(l, r) }))
-    else {
-      graft.functions.FallbackWarning.note("graft_bpe")
-      val table = new graft.functions.Bpe.MergeTable(merges)
-      udf((ws: Seq[String]) => graft.functions.Bpe.encodeWords(ws, table)).apply(words)
-    }
+    * driver loop). */
+  private[graft] def bpeTokensCol(words: Column, merges: IndexedSeq[(String, String)]): Column =
+    // typedLit, not array(array(..)): it ships the table as ONE literal
+    // and keeps the array<array<string>> type when the trained table is
+    // EMPTY (array() of zero elements types as array<null>, which the
+    // expression's type check rightly rejects).
+    Kernels.bpe(words, typedLit(merges.map { case (l, r) => Seq(l, r) }))
 
   /** Per-document REAL subword token counts: train the corpus' merge
     * table ([[bpeMergesOf]]), encode every document where it lives, and
@@ -358,7 +330,7 @@ object TextOps {
     * ([[graft.verify.Expected.bpeRows]]) — shared trainer and per-word
     * encoder, independently re-derived word counts and aggregation. */
   def qTokenBpe(s: SparkSession, dir: String): DataFrame =
-    tokenBpeOf(s, Tables.documents(s, dir))
+    tokenBpeOf(Tables.documents(s, dir))
 
   /** Materialize a trained BPE merge table as a stored MODEL — the
     * "train once, encode forever" artifact a deployment actually ships
@@ -472,7 +444,7 @@ object TextOps {
     * identical output by construction (same encoder, same merge table). */
   private[graft] def tokenBpeStoredOf(s: SparkSession, docs: DataFrame,
       modelPath: String): DataFrame =
-    tokenBpeWith(s, docs, loadBpeModel(s, modelPath))
+    tokenBpeWith(docs, loadBpeModel(s, modelPath))
 
   /** Tmp-scoped model path per dataset ([[graft.sources.TmpStores]]). */
   private def modelPath(kind: String, dir: String): String =
@@ -506,23 +478,22 @@ object TextOps {
       writeBpeModel(s, docs.filter(!late), path)
       appendBpeVersion(s, docs, path, version = 1L)
     }
-    tokenBpeWith(s, docs, loadBpeModelAt(s, path, 0L))
+    tokenBpeWith(docs, loadBpeModelAt(s, path, 0L))
   }
 
   /** [[qTokenBpe]] over an arbitrary (doc_id, text) frame — the seam
     * TextOpsSpec drives constructed corpora through. */
-  private[graft] def tokenBpeOf(s: SparkSession, docs: DataFrame): DataFrame =
-    tokenBpeWith(s, docs, bpeMergesOf(docs))
+  private[graft] def tokenBpeOf(docs: DataFrame): DataFrame =
+    tokenBpeWith(docs, bpeMergesOf(docs))
 
-  private def tokenBpeWith(s: SparkSession, docs: DataFrame,
-      merges: IndexedSeq[(String, String)]): DataFrame = {
+  private def tokenBpeWith(docs: DataFrame, merges: IndexedSeq[(String, String)]): DataFrame = {
     docs
       .select(col("doc_id"),
         filter(split(normText(col("text")), " "), w => length(w) > 0).as("words"))
       .select(col("doc_id"),
         size(col("words")).cast(LongType).as("n_words"),
         length(array_join(col("words"), "")).cast(LongType).as("n_chars"),
-        bpeTokensCol(s, col("words"), merges).as("toks"))
+        bpeTokensCol(col("words"), merges).as("toks"))
       .select(col("doc_id"), col("n_words"), col("n_chars"),
         size(col("toks")).cast(LongType).as("n_bpe_tokens"),
         when(size(col("toks")) > 0,
@@ -854,22 +825,14 @@ object TextOps {
     * cheapest possible distribution shape for a per-document rule set.
     */
   private[graft] def repetitionStats(docs: DataFrame, ordered: Boolean = true): DataFrame = {
-    val s = docs.sparkSession
-    val topCnt =
-      if (s.catalog.functionExists("graft_topcount"))
-        call_function("graft_topcount", col("words"))
-      else {
-        graft.functions.FallbackWarning.note("graft_topcount")
-        udf((w: Seq[String]) => graft.functions.DocHashes.topCountSeq(w)).apply(col("words"))
-      }
     val base = docs
       .select(col("doc_id"), col("text"), split(normText(col("text")), " ").as("words"))
       .filter(size(col("words")) >= 2)
-    val bigrams = bigramsOfWords(s)
+    val bigrams = Kernels.bigrams(col("words"))
     val lines = split(col("text"), "\n")
     val rowStats = base.select(col("doc_id"),
       size(col("words")).cast(LongType).as("n_words"),
-      topCnt.cast(LongType).as("top_cnt"),
+      Kernels.topCount(col("words")).cast(LongType).as("top_cnt"),
       (size(col("words")) - 1).cast(LongType).as("n_bigrams"),
       size(array_distinct(bigrams)).cast(LongType).as("n_distinct_bigrams"),
       round(length(array_join(col("words"), "")) / size(col("words")).cast("double"), 6)
@@ -931,26 +894,6 @@ object TextOps {
   /** The gram stream of a corpus — (doc_id, bg, w1), ONE definition for
     * the in-query LM, the model writer, and the stored scorer, so the
     * three can never tokenize differently. */
-  /** THE bigram projection over a `words` array column — one definition
-    * for the Gopher repetition stats and the bigram LM (the lmGrams
-    * "can never tokenize differently" contract applied to the gram
-    * construction itself). The builtin tree, package-private so
-    * TextOpsSpec pins it against the native kernel. */
-  private[graft] def bigramsOfWordsTree: Column =
-    expr("transform(sequence(1, size(words) - 1), i -> concat(words[i-1], ' ', words[i]))")
-
-  /** [[bigramsOfWordsTree]] as the native [[graft.functions.BigramArray]]
-    * kernel when the session has GraftExtensions (r22, guide §4): the
-    * bigram construction fronts every LM/DSIR gram explode — the
-    * corpus-scale projection of the whole text-model family — and the
-    * tree pays a sequence alloc plus lambda dispatch and two GetArrayItem
-    * evaluations per gram where the kernel runs one loop. Same strings,
-    * same concat null-propagation. */
-  private def bigramsOfWords(s: SparkSession): Column =
-    if (s.catalog.functionExists("graft_bigrams"))
-      call_function("graft_bigrams", col("words"))
-    else { graft.functions.FallbackWarning.note("graft_bigrams"); bigramsOfWordsTree }
-
   /** Explicit store schemas for the model-plane counts reads: a corpus
     * that never produced a count row (every doc < 2 words for the LM,
     * empty classifier domain for the NB) writes partition dirs with no
@@ -964,7 +907,7 @@ object TextOps {
   private def lmGrams(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(normText(col("text")), " ").as("words"))
       .filter(size(col("words")) >= 2)
-      .select(col("doc_id"), explode(bigramsOfWords(docs.sparkSession)).as("bg"))
+      .select(col("doc_id"), explode(Kernels.bigrams(col("words"))).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
 
   /** The 1-row vocabulary-size frame of a corpus (add-one smoothing's
@@ -1385,7 +1328,7 @@ object TextOps {
     * The three scalars collect driver-side (model-plane, ≤ B rows) and
     * fold into the scan projection as literals; the count frames
     * broadcast. */
-  private def scoreUnderDsirModel(s: SparkSession, docs: DataFrame,
+  private def scoreUnderDsirModel(docs: DataFrame,
       cs: DataFrame, ct: DataFrame, path: String): DataFrame = {
     val row = cs.agg(coalesce(sum("c"), lit(0L)).as("ns"), count(lit(1)).as("v2"))
       .crossJoin(ct.agg(coalesce(sum("c"), lit(0L)).as("nt"))).collect()(0)
@@ -1410,7 +1353,7 @@ object TextOps {
   def dsirScoreStored(s: SparkSession, docs: DataFrame, path: String): DataFrame = {
     graft.sources.Stores.recover(s, path)
     val (cs, ct) = dsirModelFrames(s, path, None)
-    scoreUnderDsirModel(s, docs, cs, ct, path).orderBy("doc_id")
+    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
   }
 
   /** Top-K selection under the stored model — [[dsirScoreStored]]
@@ -1421,7 +1364,7 @@ object TextOps {
       k: Int): DataFrame = {
     graft.sources.Stores.recover(s, path)
     val (cs, ct) = dsirModelFrames(s, path, None)
-    dsirRank(scoreUnderDsirModel(s, docs, cs, ct, path), k)
+    dsirRank(scoreUnderDsirModel(docs, cs, ct, path), k)
   }
 
   /** [[dsirScoreStored]] AS OF admission batch `asOf` — the mixture
@@ -1438,7 +1381,7 @@ object TextOps {
     graft.sources.Stores.recover(s, path)
     graft.sources.Stores.requireAsOfReconstructable(s, path, asOf)
     val (cs, ct) = dsirModelFrames(s, path, Some(asOf))
-    scoreUnderDsirModel(s, docs, cs, ct, path).orderBy("doc_id")
+    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
   }
 
   /** Compact the stored model: batch partitions below the watermark
@@ -2521,23 +2464,17 @@ object TextOps {
   private[graft] val HhPctDenom = 100L
 
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame =
-    heavyHittersOf(s, Tables.documents(s, dir))
+    heavyHittersOf(Tables.documents(s, dir))
 
-  private[graft] def heavyHittersOf(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def heavyHittersOf(docs: DataFrame): DataFrame = {
     val words = docs
       .filter(col("lang").isNotNull)
       .select(col("lang"), explode(split(normText(col("text")), " ")).as("word"))
       .filter(col("word") =!= "")
     val totals = words.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-    val cands =
-      if (s.catalog.functionExists("graft_mg"))
-        words.groupBy("lang")
-          .agg(call_function("graft_mg", col("word"), lit(HhCapacity)).as("sk"))
-          .select(col("lang"), explode(col("sk.word")).as("word"))
-      else { // extension absent: every distinct term is a candidate (exact, unbounded)
-        graft.functions.FallbackWarning.note("graft_mg")
-        words.select("lang", "word").distinct()
-      }
+    val cands = words.groupBy("lang")
+      .agg(Kernels.mg(col("word"), HhCapacity).as("sk"))
+      .select(col("lang"), explode(col("sk.word")).as("word"))
     words.join(broadcast(cands), Seq("lang", "word"))
       .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
       .join(broadcast(totals), "lang")
@@ -2565,24 +2502,14 @@ object TextOps {
   private[graft] val CompressRatioMin = 0.30
   private[graft] val CompressRatioMax = 0.75
 
-  private def deflateLenCol(s: SparkSession, c: Column): Column =
-    if (s.catalog.functionExists("graft_deflate_len"))
-      call_function("graft_deflate_len", c)
-    else {
-      graft.functions.FallbackWarning.note("graft_deflate_len")
-      udf((t: String) =>
-        graft.functions.Zlib.deflateLen(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        .apply(c)
-    }
-
   def qCompressRatio(s: SparkSession, dir: String): DataFrame =
-    compressRatioOf(s, Tables.documents(s, dir))
+    compressRatioOf(Tables.documents(s, dir))
 
-  private[graft] def compressRatioOf(s: SparkSession, docs: DataFrame): DataFrame =
+  private[graft] def compressRatioOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),
-        deflateLenCol(s, col("text")).as("deflate_len"))
+        Kernels.deflateLen(col("text")).as("deflate_len"))
       // guard the ANSI division: an empty doc has no ratio and is junk
       .withColumn("compress_ratio",
         when(col("n_bytes") > 0,
@@ -2613,7 +2540,7 @@ object TextOps {
       .filter(col("lang").isNotNull)
       .select(col("lang"), col("doc_id"), pri.as("pri"))
       .groupBy("lang")
-      .agg(Similarity.topkCol(s, col("pri"), col("doc_id"), SamplePerGroupK).as("top"))
+      .agg(Kernels.topk(col("pri"), col("doc_id"), SamplePerGroupK).as("top"))
       .select(col("lang"), explode(col("top.neighbor_id")).as("doc_id"))
       .orderBy("lang", "doc_id")
   }

@@ -525,7 +525,7 @@ object Expected {
     * the exact re-rank is a hash mismatch. Corpus rows skip normed()
     * like [[pqRows]] (stage 1 never divides by a corpus norm); in
     * stage 2 a zero-norm shortlisted row never ranks — the engine's
-    * topkCol null-drop contract, mirrored. */
+    * graft_topk null-drop contract, mirrored. */
   def pqRefineRows(embs: Seq[(Long, Array[Float])]): Seq[(Long, Long, Long, Double)] = {
     val pq = new PqTwinModel(embs)
     val raw = embs.map { case (id, e) => (id, e.map(_.toDouble)) }

@@ -72,8 +72,8 @@ class DedupSpec extends AnyFunSuite {
     val docs = Seq("the quick brown fox jumps over the lazy dog",
       "lorem ipsum dolor sit amet", "a b c").toDF("text")
     val native = docs.select(
-      call_function("graft_simhash", words).as("sh"),
-      call_function("graft_minhash", words).as("mh")).collect()
+      Kernels.simhash(words).as("sh"),
+      Kernels.minhash(words).as("mh")).collect()
     val simUdf = udf((w: Seq[String]) => DocHashes.simhashSeq(w, 1))
     val mhUdf = udf((w: Seq[String]) => DocHashes.minhashSeq(w, 3, 16))
     val fallback = docs.select(simUdf(words).as("sh"), mhUdf(words).as("mh")).collect()
@@ -102,15 +102,29 @@ class DedupSpec extends AnyFunSuite {
       (1 to 40).map(i => s"w${i % 5}")).toDF("words")
     val all = corpus.unionByName(adversarial)
     val d3 = all.select(
-        call_function("graft_gramset", col("words"), lit(3)).as("n"),
-        Dedup.gramSetTree.as("t"))
+        Kernels.gramSet(col("words"), 3).as("n"),
+        KernelTwins.gramSetTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(d3 === 0, "3-gram kernel must equal the concat_ws tree exactly")
     val d8 = all.select(col("words").as("w")).select(
-        call_function("graft_gramset", col("w"), lit(8)).as("n"),
-        Dedup.decontamGramSetTree.as("t"))
+        Kernels.gramSet(col("w"), 8).as("n"),
+        KernelTwins.decontamGramSetTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(d8 === 0, "8-gram kernel must equal the array_join/slice tree exactly")
+    // generated arrays at both widths: non-ASCII, fullwidth and emoji
+    // words, empty and NULL words (skipped like concat_ws/array_join do),
+    // NULL arrays, and a small vocabulary so grams repeat
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val prop = Prop.forAll(Gen.listOfN(30, KernelsGen.words(8, 20))) { ws =>
+      val df = ws.map(Tuple1(_)).toDF("words")
+      df.select(Kernels.gramSet(col("words"), 3).as("n"), KernelTwins.gramSetTree.as("t"))
+        .filter(not(col("n") <=> col("t"))).count() == 0 &&
+        df.select(col("words").as("w"))
+          .select(Kernels.gramSet(col("w"), 8).as("n"), KernelTwins.decontamGramSetTree.as("t"))
+          .filter(not(col("n") <=> col("t"))).count() == 0
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, s"gram-set kernel vs trees on generated arrays: ${res.status}")
   }
 
   test("minhash agreement tracks exact Jaccard over generated corpora (property)") {
@@ -645,9 +659,8 @@ class DedupSpec extends AnyFunSuite {
   test("native graft_bloom aggregate equals the driver-side fold bit-for-bit") {
     import spark.implicits._
     import graft.functions.GBloom
-    assert(spark.catalog.functionExists("graft_bloom"))
     val buckets = (0 until 1000).map(i => s"bk-$i").toDF("bucket")
-    val native = Dedup.bloomOfBuckets(spark, buckets)
+    val native = Dedup.bloomOfBuckets(buckets)
     val bits = new Array[Long](Dedup.BloomBits / 64)
     (0 until 1000).foreach(i => GBloom.add(bits, Dedup.BloomHashes,
       s"bk-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)))

@@ -212,9 +212,9 @@ class SimilaritySpec extends AnyFunSuite {
         (r.getLong(0), r.getSeq[org.apache.spark.sql.Row](1)
           .map(x => (x.getLong(0), x.getDouble(1))))
       }.toSeq
-    val native = top(Similarity.topkCol(spark, col("score"), col("id"), 3))
-    // mirrors topkCol's fallback branch verbatim (the session has the
-    // extension, so topkCol itself would take the native path here)
+    val native = top(Kernels.topk(col("score"), col("id"), 3))
+    // the collect+sort reference twin: the same total order as one
+    // array_sort over (is-not-NaN, negated score, id) structs
     val fallback = top(
       transform(
         slice(array_sort(collect_list(
@@ -249,8 +249,8 @@ class SimilaritySpec extends AnyFunSuite {
       Seq.fill(64)((rnd.nextDouble() - 0.5).toFloat),
       Seq.fill(64)((rnd.nextDouble() - 0.5).toFloat)))
     val df = rows.toDF("a", "b")
-    val diffs = df.select(call_function("graft_dot", col("a"), col("b")).as("native"),
-        Similarity.interpretedDot(col("a"), col("b")).as("interp"))
+    val diffs = df.select(Kernels.dot(col("a"), col("b")).as("native"),
+        KernelTwins.interpretedDot(col("a"), col("b")).as("interp"))
       .filter(col("native") =!= col("interp")).count()
     assert(diffs === 0, "native and interpreted dot products must be identical")
   }
@@ -279,12 +279,35 @@ class SimilaritySpec extends AnyFunSuite {
     val cb = Similarity.trainPqOnSample(Similarity.pqSample(Tables.embeddings(spark, dir)))
     val cbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
     val diffs = e.select(
-        call_function("graft_pq_encode", col("embedding"), cbLit).as("nc"),
-        Similarity.pqCodeColsTree(spark, cb)(col("embedding")).as("tc"),
-        call_function("graft_pq_lut", col("embedding"), cbLit).as("nl"),
-        Similarity.pqLutTree(spark, cb)(col("embedding")).as("tl"))
+        Kernels.pqEncode(col("embedding"), cbLit).as("nc"),
+        KernelTwins.pqCodeColsTree(cb)(col("embedding")).as("tc"),
+        Kernels.pqLut(col("embedding"), cbLit).as("nl"),
+        KernelTwins.pqLutTree(cb)(col("embedding")).as("tl"))
       .filter(col("nc") =!= col("tc") || col("nl") =!= col("tl")).count()
     assert(diffs === 0, "native and tree-form PQ kernels must be identical")
+    // generated codebooks (1-16 codes per subspace, wide magnitudes) over
+    // generated embeddings, and the ADC sum over LUTs crossed with random
+    // in-range codes
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val prop = Prop.forAll(VecGen.codebook, Gen.listOfN(12, VecGen.embedding)) { (cb, embs) =>
+      val genCbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
+      val df = embs.map(Tuple1(_)).toDF("embedding")
+      val encLut = df.select(
+          Kernels.pqEncode(col("embedding"), genCbLit).as("nc"),
+          KernelTwins.pqCodeColsTree(cb)(col("embedding")).as("tc"),
+          Kernels.pqLut(col("embedding"), genCbLit).as("nl"),
+          KernelTwins.pqLutTree(cb)(col("embedding")).as("tl"))
+        .filter(col("nc") =!= col("tc") || col("nl") =!= col("tl")).count()
+      val rnd = new scala.util.Random(cb.length * 31 + embs.length)
+      val codes = Seq.fill(12)(cb.map(sub => rnd.nextInt(sub.length)).toSeq).map(Tuple1(_)).toDF("codes")
+      val adc = df.select(Kernels.pqLut(col("embedding"), genCbLit).as("lut")).crossJoin(codes)
+        .select(Kernels.pqAdc(col("lut"), col("codes")).as("n"),
+          KernelTwins.pqAdcTree(col("lut"), col("codes")).as("t"))
+        .filter(col("n") =!= col("t")).count()
+      encLut == 0 && adc == 0
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
+    assert(res.passed, s"PQ kernels vs trees on generated codebooks: ${res.status}")
   }
 
   test("native PQ ADC kernel equals the element_at tree form bit-for-bit") {
@@ -302,12 +325,12 @@ class SimilaritySpec extends AnyFunSuite {
     // real corpus LUT/code pairs, CROSSED (the serve scan's shape):
     // query LUTs meet codes of OTHER rows, not just their own
     val luts = e.limit(20).select(
-      call_function("graft_pq_lut", col("embedding"), cbLit).as("lut"))
+      Kernels.pqLut(col("embedding"), cbLit).as("lut"))
     val codes = e.limit(50).select(
-      call_function("graft_pq_encode", col("embedding"), cbLit).as("codes"))
+      Kernels.pqEncode(col("embedding"), cbLit).as("codes"))
     val diffs = luts.crossJoin(codes)
-      .select(call_function("graft_pq_adc", col("lut"), col("codes")).as("native"),
-        Similarity.pqAdcTree(col("lut"), col("codes")).as("tree"))
+      .select(Kernels.pqAdc(col("lut"), col("codes")).as("native"),
+        KernelTwins.pqAdcTree(col("lut"), col("codes")).as("tree"))
       .filter(col("native") =!= col("tree")).count()
     assert(diffs === 0, "native and tree-form ADC sums must be identical")
   }
@@ -326,8 +349,8 @@ class SimilaritySpec extends AnyFunSuite {
       Tuple1(Array.tabulate(64)(i => if (i == 63) Float.NegativeInfinity else -0.25f)))
       .toDF("embedding")
     val rows = bad.select(
-        call_function("graft_pq_encode", col("embedding"), cbLit).as("nc"),
-        Similarity.pqCodeColsTree(spark, cb)(col("embedding")).as("tc"))
+        Kernels.pqEncode(col("embedding"), cbLit).as("nc"),
+        KernelTwins.pqCodeColsTree(cb)(col("embedding")).as("tc"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Int](0) === r.getSeq[Int](1),
@@ -349,27 +372,40 @@ class SimilaritySpec extends AnyFunSuite {
       Array.fill(64)(Float.MinPositiveValue))
       .map(Tuple1(_)).toDF("embedding")
     val base = Tables.embeddings(spark, dir)
-      .withColumn("nrm", sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(Kernels.dot(col("embedding"), col("embedding"))))
     val cents = Similarity.trainQuantizerOnSample(
       base.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(64)
         .select("embedding", "nrm").collect()
         .map(r => { val n = r.getDouble(1); r.getSeq[Float](0).map(_ / n).toArray }))
     val withN = base.select("embedding").limit(200).unionByName(adversarial)
       .withColumn("nrm",
-        sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
+        sqrt(Kernels.dot(col("embedding"), col("embedding"))))
     val packed = typedlit(cents.map { case (i, c, cn) => (i, c.toSeq, cn) }.toSeq)
     val diffs = withN.select(
-        call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed).as("n"),
-        Similarity.ivfScoresTree(spark, cents)(col("embedding"), col("nrm")).as("t"))
+        Kernels.ivfScores(col("embedding"), col("nrm"), packed).as("n"),
+        KernelTwins.ivfScoresTree(cents)(col("embedding"), col("nrm")).as("t"))
       .filter(col("n") =!= col("t")).count()
     assert(diffs === 0, "native and tree-form IVF scores must be identical")
+    locally { // generated quantizers (1-20 lists) over generated embeddings
+      import org.scalacheck.{Gen, Prop, Test => SCTest}
+      val prop = Prop.forAll(VecGen.centroids, Gen.listOfN(12, VecGen.embedding)) { (cs, embs) =>
+        val q = typedlit(cs.map { case (i, c, cn) => (i, c.toSeq, cn) }.toSeq)
+        embs.map(Tuple1(_)).toDF("embedding")
+          .withColumn("nrm", sqrt(Kernels.dot(col("embedding"), col("embedding"))))
+          .select(Kernels.ivfScores(col("embedding"), col("nrm"), q).as("n"),
+            KernelTwins.ivfScoresTree(cs)(col("embedding"), col("nrm")).as("t"))
+          .filter(col("n") =!= col("t")).count() == 0
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
+      assert(res.passed, s"IVF kernel vs tree on generated centroids: ${res.status}")
+    }
     // zero-norm vector: builtin-Divide parity. ANSI → BOTH forms throw
     // DIVIDE_BY_ZERO; non-ANSI → BOTH yield null-scored structs.
     val zero = Seq(Tuple1(Array.fill(64)(0.0f))).toDF("embedding")
       .withColumn("nrm", lit(0.0))
     Seq(
-      zero.select(call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed)),
-      zero.select(Similarity.ivfScoresTree(spark, cents)(col("embedding"), col("nrm")))
+      zero.select(Kernels.ivfScores(col("embedding"), col("nrm"), packed)),
+      zero.select(KernelTwins.ivfScoresTree(cents)(col("embedding"), col("nrm")))
     ).foreach { df =>
       val e = intercept[Throwable](df.collect())
       val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(5).toSeq
@@ -388,8 +424,8 @@ class SimilaritySpec extends AnyFunSuite {
     val zero2 = { import s2.implicits._
       Seq(Tuple1(Array.fill(64)(0.0f))).toDF("embedding").withColumn("nrm", lit(0.0)) }
     val pair = zero2.select(
-        call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed).as("n"),
-        Similarity.ivfScoresTree(s2, cents)(col("embedding"), col("nrm")).as("t"))
+        Kernels.ivfScores(col("embedding"), col("nrm"), packed).as("n"),
+        KernelTwins.ivfScoresTree(cents)(col("embedding"), col("nrm")).as("t"))
       .collect().head
     assert(pair.getSeq[org.apache.spark.sql.Row](0) === pair.getSeq[org.apache.spark.sql.Row](1),
       "non-ANSI zero-divisor must yield identical null-scored structs on both forms")
@@ -445,7 +481,7 @@ class SimilaritySpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-ivfnan").toString + "/idx"
     val ansiErr = intercept[Throwable] {
       val ansiVecs = { import spark.implicits._; rows.toDF("vec_id", "embedding") }
-      Similarity.qAnnIvfFrom(spark, ansiVecs).collect()
+      Similarity.qAnnIvfFrom(ansiVecs).collect()
     }
     assert(Iterator.iterate(ansiErr)(_.getCause).takeWhile(_ != null).take(5)
       .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")),
@@ -461,7 +497,7 @@ class SimilaritySpec extends AnyFunSuite {
         if (r.isNullAt(3)) None
         else Some(java.lang.Double.doubleToLongBits(r.getDouble(3))))).toSeq
     val stored = bits(Similarity.qIvfProbeStored(s2, path))
-    val inQuery = bits(Similarity.qAnnIvfFrom(s2, vecs))
+    val inQuery = bits(Similarity.qAnnIvfFrom(vecs))
     Seq(100L, 200L, 300L).foreach { q =>
       assert(stored.count(_._1 == q) === 5, s"real query $q must rank 5 neighbors")
     }
@@ -548,7 +584,7 @@ class SimilaritySpec extends AnyFunSuite {
     val base = (0 until 24).map(i => (i.toLong, unitVec(i)))
     val copies = Seq(100L -> unitVec(0), 101L -> unitVec(0), 102L -> unitVec(0),
       200L -> unitVec(1), 201L -> unitVec(1))
-    val out = Similarity.qDedupSemanticFrom(spark, (base ++ copies).toDF("vec_id", "embedding"))
+    val out = Similarity.qDedupSemanticFrom((base ++ copies).toDF("vec_id", "embedding"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     // every non-minimal member of a copy group drops; its keeper is the
     // group minimum (all qualifying cosines tie at exactly 1.0, so the
@@ -758,42 +794,6 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("extension-less fallback warns LOUDLY exactly once per JVM, naming the kernel and the tax") {
-    // an isolated session whose registry lacks the native kernel — the
-    // forgot-GraftExtensions deployment, scoped to this test
-    val s2 = spark.newSession()
-    s2.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prev = graft.functions.FallbackWarning.sink
-    graft.functions.FallbackWarning.resetForSpec()
-    graft.functions.FallbackWarning.sink = m => buf.synchronized { buf += m }
-    import org.apache.spark.sql.functions.lit
-    try {
-      assert(!graft.functions.FallbackWarning.hasFired)
-      Similarity.dotCol(s2, lit(null), lit(null)) // first fallback: warns
-      Similarity.dotCol(s2, lit(null), lit(null)) // second: silent
-      graft.functions.FallbackWarning.note("graft_topk") // other kernels: silent too
-      assert(graft.functions.FallbackWarning.hasFired)
-      assert(buf.size === 1,
-        s"the warning must fire exactly once per JVM, got ${buf.size}: $buf")
-      assert(buf.head.contains("graft_dot") && buf.head.contains("GraftExtensions")
-        && buf.head.contains("+79%"),
-        s"the warning must name the kernel, the fix, and the measured tax: ${buf.head}")
-      // the extension-equipped session still dispatches natively: no warn
-      graft.functions.FallbackWarning.resetForSpec()
-      Similarity.dotCol(spark, lit(null), lit(null))
-      assert(!graft.functions.FallbackWarning.hasFired,
-        "a session WITH the extension must never warn")
-    } finally {
-      // leave the flag FIRED (absorbed by the buffer, not stderr) for
-      // the rest of the suite run: other specs construct fallback twins
-      // deliberately and must stay silent
-      graft.functions.FallbackWarning.note("graft_dot")
-      graft.functions.FallbackWarning.sink = prev
-    }
-  }
-
   test("measured cost, not recall, flips the tier on a bucket-collapsed corpus") {
     import spark.implicits._
     // a corpus built to defeat the uniform-occupancy assumption: every
@@ -812,7 +812,7 @@ class SimilaritySpec extends AnyFunSuite {
       }
       (i.toLong, v.map(_.toFloat))
     }.toDF("vec_id", "embedding")
-    val (n, lshCandPerQ, ivfCandPerQ) = Similarity.measuredCandidatesFrom(spark, vecs)
+    val (n, lshCandPerQ, ivfCandPerQ) = Similarity.measuredCandidatesFrom(vecs)
     assert(n === 400L)
     assert(lshCandPerQ === (n - 1).toDouble,
       s"the collapsed corpus must measure LSH candidates = the full corpus, got $lshCandPerQ")

@@ -100,10 +100,8 @@ class TextOpsSpec extends AnyFunSuite {
     val table = new Bpe.MergeTable(merges)
     val viaUdf = udf((ws: Seq[String]) => Bpe.encodeWords(ws, table))
     val native = base.select(col("doc_id"),
-        TextOps.bpeTokensCol(spark, col("words"), merges).as("toks"))
+        TextOps.bpeTokensCol(col("words"), merges).as("toks"))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getSeq[String](1)))
-    assert(spark.catalog.functionExists("graft_bpe"),
-      "the test session must exercise the NATIVE face")
     val fallback = base.select(col("doc_id"), viaUdf(col("words")).as("toks"))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     assert(native.nonEmpty)
@@ -261,7 +259,7 @@ class TextOpsSpec extends AnyFunSuite {
     // and the stored-model face is bit-identical to retraining in-query
     val fromStore = TextOps.tokenBpeStoredOf(spark, docs, path).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSeq
-    val inQuery = TextOps.tokenBpeOf(spark, docs).collect()
+    val inQuery = TextOps.tokenBpeOf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(fromStore === inQuery,
       "a frozen stored tokenizer must encode exactly like the training run that built it")
@@ -312,10 +310,8 @@ class TextOpsSpec extends AnyFunSuite {
     // occurs, training stops with zero merges, and the native
     // expression must still type (array() of nothing is array<null> —
     // the literal has to keep array<array<string>>): per-char tokens out
-    assert(spark.catalog.functionExists("graft_bpe"),
-      "the test session must exercise the NATIVE face")
     val docs = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
-    val rows = TextOps.tokenBpeOf(spark, docs).collect()
+    val rows = TextOps.tokenBpeOf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(rows.toSeq === Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 1L)),
       "an empty merge table must tokenize per character, not crash")
@@ -439,10 +435,21 @@ class TextOpsSpec extends AnyFunSuite {
     val all = graft.sources.Tables.documents(spark, dir).select("text")
       .unionByName(adversarial)
     val diffs = all.select(
-        call_function("graft_norm_text", col("text")).as("n"),
-        graft.operators.TextOps.normTextTree(col("text")).as("t"))
+        Kernels.normText(col("text")).as("n"),
+        KernelTwins.normTextTree(col("text")).as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(diffs === 0, "native and regex-tree normText must be identical")
+    // generated inputs: mixed scripts, fullwidth forms, emoji (surrogate
+    // pairs, modifiers), case mappings that land on ASCII (İ, Kelvin
+    // sign), space/tab runs, and empty and NULL texts
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val prop = Prop.forAll(Gen.listOfN(40, KernelsGen.text)) { texts =>
+      texts.map(Tuple1(_)).toDF("text")
+        .select(Kernels.normText(col("text")).as("n"), KernelTwins.normTextTree(col("text")).as("t"))
+        .filter(not(col("n") <=> col("t"))).count() == 0
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, s"normText kernel vs tree on generated texts: ${res.status}")
   }
 
   test("native bigram-array kernel equals the transform/concat tree bit-for-bit") {
@@ -460,10 +467,24 @@ class TextOpsSpec extends AnyFunSuite {
       Seq("a", "b"), Seq("", "x", ""), Seq("aa", "a", "aaa"),
       Seq[String]("left", null, "right", null, null)).toDF("words")
     val diffs = corpus.unionByName(adversarial).select(
-        call_function("graft_bigrams", col("words")).as("n"),
-        graft.operators.TextOps.bigramsOfWordsTree.as("t"))
+        Kernels.bigrams(col("words")).as("n"),
+        KernelTwins.bigramsOfWordsTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(diffs === 0, "native and tree bigram arrays must be identical")
+    // generated word arrays (non-ASCII, fullwidth, emoji, empty and NULL
+    // words, NULL arrays). The tree is defined from 2 words up — callers
+    // filter shorter arrays — and the kernel yields [] below that.
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val prop = Prop.forAll(Gen.listOfN(40, KernelsGen.words(0, 12))) { ws =>
+      val df = ws.map(Tuple1(_)).toDF("words")
+      df.filter(size(col("words")) >= 2 || col("words").isNull)
+        .select(Kernels.bigrams(col("words")).as("n"), KernelTwins.bigramsOfWordsTree.as("t"))
+        .filter(not(col("n") <=> col("t"))).count() == 0 &&
+        df.filter(size(col("words")) < 2)
+          .filter(size(Kernels.bigrams(col("words"))) =!= 0).count() == 0
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, s"bigram kernel vs tree on generated arrays: ${res.status}")
   }
 
   test("row-local top-word count equals the explode+groupBy formulation on the corpus") {
@@ -484,16 +505,28 @@ class TextOpsSpec extends AnyFunSuite {
       .groupBy("doc_id")
       .agg(max("c").as("top_cnt"), sum("c").as("n_words"))
     val rowLocal = base.select(col("doc_id"),
-      call_function("graft_topcount", col("words")).as("top_cnt"),
+      Kernels.topCount(col("words")).as("top_cnt"),
       size(col("words")).cast("long").as("n_words"))
     assert(rowLocal.join(reference, Seq("doc_id"))
       .filter(rowLocal("top_cnt") =!= reference("top_cnt") ||
         rowLocal("n_words") =!= reference("n_words")).count() === 0L)
     // and the UDF fallback twin matches the kernel
-    val viaUdf = udf((w: Seq[String]) => graft.functions.DocHashes.topCountSeq(w))
-    assert(base.select(call_function("graft_topcount", col("words")).as("n"),
+    val viaUdf = udf((w: Seq[String]) => KernelTwins.topCountSeq(w))
+    assert(base.select(Kernels.topCount(col("words")).as("n"),
         viaUdf(col("words")).as("u"))
       .filter(col("n") =!= col("u")).count() === 0L)
+    // generated arrays against a plain-Scala count: NULL is its own key,
+    // [] counts 0, a NULL array yields NULL
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import spark.implicits._
+    val prop = Prop.forAll(Gen.listOfN(40, KernelsGen.words(0, 12))) { ws =>
+      val got = ws.map(Tuple1(_)).toDF("words").select(Kernels.topCount(col("words")))
+        .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+      got == ws.map(w => Option(w).map(_.groupBy(identity).values.map(_.size.toLong)
+        .maxOption.getOrElse(0L)))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, s"top-count kernel vs reference on generated arrays: ${res.status}")
   }
 
   test("Gopher structural rules: each signal fires on its planted doc, clean doc passes") {
@@ -631,7 +664,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("heavy hitters: sketch path active, result equals the exact answer") {
     import spark.implicits._
-    assert(spark.catalog.functionExists("graft_mg"), "extension must register graft_mg")
     // planted: 'pad' is 150 of 300 en words (50%); each filler appears
     // once (1/300 < 1% → excluded). The tiny es stratum shows the
     // threshold is per-language: 1 of 2 words is 50%, so both report.
@@ -641,7 +673,7 @@ class TextOpsSpec extends AnyFunSuite {
       val suffix = s"${('a' + i / 26).toChar}${('a' + i % 26).toChar}"
       (i.toLong, s"pad filler$suffix", "en")
     } :+ (999L, "unico dos", "es")).toDF("doc_id", "text", "lang")
-    val got = graft.operators.TextOps.heavyHittersOf(spark, docs).collect()
+    val got = graft.operators.TextOps.heavyHittersOf(docs).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(got.toSeq === Seq(("en", "pad", 150L), ("es", "dos", 1L), ("es", "unico", 1L)))
 
@@ -699,8 +731,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("compress ratio: repetition flags low, noise flags high, prose passes") {
     import spark.implicits._
-    assert(spark.catalog.functionExists("graft_deflate_len"),
-      "extension must register graft_deflate_len")
     val noise = new scala.util.Random(11).alphanumeric.take(400).mkString
     val docs = Seq(
       1L -> ("lorem " * 200).trim,      // pure repetition → ratio near 0
@@ -709,7 +739,7 @@ class TextOpsSpec extends AnyFunSuite {
         "wanders far away to sleep under an old oak tree until dawn " +
         "breaks and the farm slowly wakes to another quiet morning") * 2,
       4L -> "").toDF("doc_id", "text")
-    val got = graft.operators.TextOps.compressRatioOf(spark, docs).collect()
+    val got = graft.operators.TextOps.compressRatioOf(docs).collect()
       .map(r => (r.getLong(0), (r.getLong(1),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getInt(4)))).toMap
     assert(got(1L)._2.get < 0.30 && got(1L)._3 === 1, s"repetition must flag low: ${got(1L)}")
@@ -724,7 +754,7 @@ class TextOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     got.foreach { case (id, (nb, _, _)) => assert(nb >= 0, s"doc $id") }
     val viaExpr = docs.select(col("doc_id"),
-      call_function("graft_deflate_len", col("text")).as("dl"))
+      Kernels.deflateLen(col("text")).as("dl"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaExpr === viaUdf)
   }
